@@ -79,14 +79,6 @@ object SparkEntry {
     Set("q_simhash_neardup", "q_ann_recall", "q_ann_frontier",
       "q_candidate_stats", "q_semdedup", "q_embedding_neardup_lsh")
 
-  /** Cross-scale CERTIFIED recall floors (milli-recall) + serving
-    * constants + cost expressions now live in ONE config,
-    * `functions.AnnPolicy` (r18, VERDICT task 2) — the engine side of
-    * `q_ann_frontier`, its oracle SQL and the rung implementations all
-    * read it, so a rung re-point cannot mis-rank the policy surface. */
-  private def frontierFloorsMilli: Seq[(String, Long)] =
-    graft.functions.AnnPolicy.rungs.map(r => (r.method, r.floorMilli))
-
   /** Per-SF half-measured quantizer floors for `q_ann_recall` — each
     * driver scale gets its own floor at HALF that scale's measured
     * recall. `AnnPolicy.floorMilli` per rung is the MINIMUM of these

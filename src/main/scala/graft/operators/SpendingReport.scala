@@ -20,12 +20,13 @@ import org.apache.spark.sql.functions._
   *  - value-ascending sort of key totals and "top-5" = first 5 of that
   *    ASC sort (as-implemented quirk): transformer.py:212-213,240
   *
-  * Everything here is stock Catalyst: hash aggregates with map-side
-  * partial aggregation, one shuffle per groupBy on the grouping key,
-  * window functions over a (key)-partitioned sort. At 100 TB the
-  * category/vendor cardinalities are the shuffle keys — low-cardinality
-  * (category) aggregations reduce almost entirely map-side; the dense
-  * date×key grid stays small (days × keys, independent of row count).
+  * Everything here is stock Catalyst. The report itself (`report`)
+  * scans the input once: one map-side-combined aggregate folds it into
+  * exact (date, category, vendor) cells — days × keys rows, independent
+  * of row count — and every report field is a fold of those cells on
+  * one partition. The standalone per-key queries (`keyTotals`,
+  * `top5Asc`, `paretoContribution`, …) keep one shuffle per groupBy on
+  * the grouping key and rank with the range-partitioned `globalRank`.
   */
 object SpendingReport {
 
@@ -155,15 +156,6 @@ object SpendingReport {
   def distinctKeys(tx: DataFrame, key: String): DataFrame =
     tx.select(col(key)).distinct()
 
-  /** A7/A8 aggregate form: sorted distinct array + exact cardinality.
-    * At 100 TB swap countDistinct for approx_count_distinct (HLL). */
-  def uniqueKeySets(tx: DataFrame): DataFrame =
-    tx.agg(
-      sort_array(collect_set(col("category"))).as("unique_categories"),
-      countDistinct(col("category")).as("n_categories"),
-      sort_array(collect_set(col("vendor"))).as("unique_vendors"),
-      countDistinct(col("vendor")).as("n_vendors"))
-
   /** Scalar (gate-hashable) form of the distinct sets: md5 of the
     * '|'-joined sorted set + exact cardinalities. Array columns crash
     * the driver's pandas-based compare harness (unhashable ndarray), so
@@ -176,40 +168,44 @@ object SpendingReport {
       md5(array_join(sort_array(collect_set(col("vendor"))), "|")).as("vendors_md5"),
       countDistinct(col("vendor")).as("n_vendors"))
 
-  /** Per-(file,key) sums — the long form of the reference's pivot table
-    * (transformer.py:217-218): rows = file dates, columns = keys, built
-    * here as (txn_date, key, amount) without materializing the wide
-    * shape. A10's within-file duplicate-key re-aggregation is inherent. */
-  def bucketKeySums(tx: DataFrame, key: String): DataFrame =
-    tx.groupBy(col("txn_date"), col(key))
-      .agg(moneySum(amt2).as("amount"))
+  /** The exact cells every report field folds from: one row per
+    * (txn_date, keys…) — the long form of the reference's per-file
+    * pivot (transformer.py:217-218), A10's within-file duplicate keys
+    * re-aggregated — with the decimal sum of the 2dp amounts and the
+    * row count. The cells are (#dates × #key combinations), independent
+    * of row count, so they are coalesced to one partition and every
+    * later stage over them is one task. The eager `localCheckpoint`
+    * makes the input scan happen once. It is not `cache()`: the cache
+    * matches plans by `sameResult`, which for a file source compares
+    * root paths, not the files, so a later read of an appended landing
+    * dir would be served the old cells. */
+  private def cells(tx: DataFrame, keys: Seq[String]): DataFrame =
+    tx.groupBy((col("txn_date") +: keys.map(col)): _*)
+      .agg(sum(amt2).as("amount"), count(lit(1)).as("n"))
+      .coalesce(1)
+      .localCheckpoint()
 
-  /** The dense date×key grid with absent cells imputed 0.0 — pandas
-    * `fillna(0)` over the pivot (transformer.py:217-218). The grid is
-    * (#dates × #keys) rows regardless of input size, so the cross join
-    * is tiny and broadcast. */
-  def denseGrid(tx: DataFrame, key: String): DataFrame = {
-    val dates = tx.select(col("txn_date")).distinct()
-    val keys  = tx.select(col(key)).distinct()
-    dates.crossJoin(broadcast(keys))
-      .join(bucketKeySums(tx, key), Seq("txn_date", key), "left")
-      .na.fill(0.0, Seq("amount"))
+  /** The number of distinct dates, the latest date and its predecessor
+    * (null when absent), read off the cells in one job. */
+  private final case class Dates(n: Long, latest: Column, prev: Column)
+
+  private def dates(cells: DataFrame): Dates = {
+    val desc = sort_array(collect_set(col("txn_date")), asc = false)
+    val r = cells.agg(size(desc), try_element_at(desc, lit(1)),
+      try_element_at(desc, lit(2))).head()
+    Dates(r.getInt(0), lit(r.get(1)), lit(r.get(2)))
   }
 
-  /** A9: zero-imputed per-key mean — sum over ALL file dates divided by
-    * the number of file dates (transformer.py:225-226; NOT avg(), which
-    * would divide by per-key row counts). The division runs in double on
-    * an exact decimal sum, unrounded: deterministic bit-identical output
-    * (rounding a post-division double would re-introduce engine-specific
-    * round-boundary behavior). */
-  def zeroImputedMean(tx: DataFrame, key: String): DataFrame = {
-    val nDates = tx.select(col("txn_date")).distinct().count()
-    tx.groupBy(col(key))
-      .agg((moneySum(amt2) / lit(nDates.toDouble)).as("mean_amount"))
-  }
-
-  /** W1/W2: percent change of the latest file date vs its predecessor,
-    * per key, over the zero-imputed dense grid (transformer.py:221-222).
+  /** One fold per key over the cells: the exact total; the A9
+    * zero-imputed mean — the total over ALL file dates divided by their
+    * number (transformer.py:225-226; NOT avg(), which would divide by
+    * the key's own row count); and W1/W2, the pct_change of the latest
+    * file date vs its predecessor (transformer.py:221-222), from the
+    * key's sums at those two dates. A key absent on a date sums to 0
+    * there, which is pandas' `fillna(0)` over the pivot, so no dense
+    * date×key grid is built. Divisions run in double on exact decimal
+    * sums, unrounded: rounding a post-division double would bring back
+    * engine-specific round-boundary behaviour.
     *
     * Two modes for the 0-predecessor edge (the one place engine and
     * reference-as-implemented can differ — see README "pct_change edge
@@ -222,27 +218,44 @@ object SpendingReport {
     *    (pandas' (x-0)/0; `.fillna(0)` replaces only NaN, so the inf
     *    SURVIVES in the reference's report), while the leading row and
     *    0→0 produce NaN and ARE zeroed by fillna. */
-  def pctChangeLatest(tx: DataFrame, key: String,
-                      pandasInf: Boolean = false): DataFrame = {
-    val w  = Window.partitionBy(col(key)).orderBy(col("txn_date").asc)
-    val wl = Window.partitionBy(col(key)).orderBy(col("txn_date").desc)
+  private def keyFold(cells: DataFrame, key: String, d: Dates,
+                      pandasInf: Boolean): DataFrame = {
+    def at(date: Column) =
+      coalesce(sum(when(col("txn_date") === date, col("amount"))).cast("double"), lit(0.0))
+    val amount = at(d.latest)
+    val prev = when(d.prev.isNotNull, at(d.prev))
     val pct =
       if (pandasInf)
-        when(col("prev").isNull, lit(0.0))                                   // leading NaN -> fillna(0)
-          .when(col("prev") === 0.0 && col("amount") === 0.0, lit(0.0))      // 0/0 NaN -> fillna(0)
-          .when(col("prev") === 0.0 && col("amount") > 0.0, lit(Double.PositiveInfinity))
-          .when(col("prev") === 0.0, lit(Double.NegativeInfinity))
-          .otherwise((col("amount") - col("prev")) / col("prev"))
+        when(prev.isNull, lit(0.0))                                   // leading NaN -> fillna(0)
+          .when(prev === 0.0 && amount === 0.0, lit(0.0))             // 0/0 NaN -> fillna(0)
+          .when(prev === 0.0 && amount > 0.0, lit(Double.PositiveInfinity))
+          .when(prev === 0.0, lit(Double.NegativeInfinity))
+          .otherwise((amount - prev) / prev)
       else
-        when(col("prev").isNull || col("prev") === 0.0, lit(0.0))
-          .otherwise((col("amount") - col("prev")) / col("prev"))
-    denseGrid(tx, key)
-      .withColumn("prev", lag(col("amount"), 1).over(w))
-      .withColumn("pct_change", pct)
-      .withColumn("rn", row_number().over(wl))
-      .filter(col("rn") === 1)
-      .select(col(key), col("pct_change"))
+        when(prev.isNull || prev === 0.0, lit(0.0))
+          .otherwise((amount - prev) / prev)
+    val total = moneySum(col("amount"))
+    cells.groupBy(col(key)).agg(
+      total.as("total"),
+      (total / lit(d.n.toDouble)).as("mean_amount"),
+      pct.as("pct_change"))
   }
+
+  private def keyFold(tx: DataFrame, key: String, pandasInf: Boolean): DataFrame = {
+    val c = cells(tx, Seq(key))
+    keyFold(c, key, dates(c), pandasInf)
+  }
+
+  /** A9: zero-imputed per-key mean (see `keyFold`). */
+  def zeroImputedMean(tx: DataFrame, key: String): DataFrame =
+    keyFold(tx, key, pandasInf = false).select(col(key), col("mean_amount"))
+
+  /** W1/W2: percent change of the latest file date vs its predecessor,
+    * per key, missing keys imputed 0 (see `keyFold` for both
+    * 0-predecessor modes). */
+  def pctChangeLatest(tx: DataFrame, key: String,
+                      pandasInf: Boolean = false): DataFrame =
+    keyFold(tx, key, pandasInf).select(col(key), col("pct_change"))
 
   /** The WIDE pivot shape itself (SURVEY §1.1 row 2, J2): rows = file
     * dates, one column per category, absent cells 0. Explicit pivot
@@ -278,38 +291,44 @@ object SpendingReport {
 
   /** Full report assembly (transformer.py:229-243 + P2's details
     * projection at :283): one row; ordered map-likes persisted as
-    * arrays of (key,total) structs so output hashing is deterministic.
-    */
+    * arrays of (key,value) structs so output hashing is deterministic.
+    *
+    * The input is scanned once, into the (date, category, vendor)
+    * `cells`; one job reads the date scalars off them. Each key axis is
+    * one `keyFold` plus one aggregate that builds the sorted key set,
+    * its count and the three lists: totals in the value-ascending order
+    * of the reference's sorted dict (ties broken by key name;
+    * transformer.py:212-213,234-237), pct_change and means by key.
+    * "top-5" vendors are the first 5 of that ASCENDING list — the
+    * reference's as-implemented quirk (transformer.py:240). The report
+    * gathers every key into its one row, so the folds need no
+    * distributed rank and run on the cells' one partition. */
   def report(tx: DataFrame): DataFrame = {
-    val g = globalSummary(tx)
-    val catTotals = keyTotals(tx, "category")
-      .orderBy(col("rank_asc")).select(struct(col("category"), col("total")).as("kv"))
-      .agg(collect_list(col("kv")).as("spending_per_category"))
-    val venTotals = keyTotals(tx, "vendor")
-      .orderBy(col("rank_asc")).select(struct(col("vendor"), col("total")).as("kv"))
-      .agg(collect_list(col("kv")).as("spending_per_vendor"))
-    val catPct = pctChangeLatest(tx, "category")
-      .select(struct(col("category"), col("pct_change")).as("kv"))
-      .agg(sort_array(collect_list(col("kv"))).as("pct_change_category"))
-    val venPct = pctChangeLatest(tx, "vendor")
-      .select(struct(col("vendor"), col("pct_change")).as("kv"))
-      .agg(sort_array(collect_list(col("kv"))).as("pct_change_vendor"))
-    val catMean = zeroImputedMean(tx, "category")
-      .select(struct(col("category"), col("mean_amount")).as("kv"))
-      .agg(sort_array(collect_list(col("kv"))).as("avg_category"))
-    val venMean = zeroImputedMean(tx, "vendor")
-      .select(struct(col("vendor"), col("mean_amount")).as("kv"))
-      .agg(sort_array(collect_list(col("kv"))).as("avg_vendor"))
-    val top5 = top5Asc(tx, "vendor")
-      .select(struct(col("vendor"), col("total")).as("kv"))
-      .agg(collect_list(col("kv")).as("top_5_vendors"))
-    val uniq = uniqueKeySets(tx)
-
-    // All sides are single-row aggregates -> broadcast-nested-loop cross
-    // joins of 1x1 rows; cost is the underlying aggs, not the joins.
-    val row = g.crossJoin(uniq).crossJoin(catTotals).crossJoin(venTotals)
-      .crossJoin(catPct).crossJoin(venPct).crossJoin(catMean).crossJoin(venMean)
-      .crossJoin(top5)
+    val c = cells(tx, Seq("category", "vendor"))
+    val d = dates(c)
+    val g = c.agg(
+      moneySum(col("amount")).as("total_spent"),
+      coalesce(sum(col("n")), lit(0L)).as("total_transactions"),
+      min(col("txn_date")).as("begin_date"),
+      max(col("txn_date")).as("end_date"))
+    def axis(key: String, plural: String): DataFrame = {
+      def byKey(v: String) = sort_array(collect_list(struct(col(key), col(v))))
+      val byTotal = sort_array(collect_list(struct(col("total"), col(key))))
+      keyFold(c, key, d, pandasInf = false).agg(
+        sort_array(collect_list(col(key))).as(s"unique_$plural"),
+        count(col(key)).as(s"n_$plural"),
+        transform(byTotal, kv => struct(kv(key).as(key), kv("total").as("total")))
+          .as(s"spending_per_$key"),
+        byKey("pct_change").as(s"pct_change_$key"),
+        byKey("mean_amount").as(s"avg_$key"))
+    }
+    val row = g.crossJoin(axis("category", "categories")).crossJoin(axis("vendor", "vendors"))
+      .select(col("total_spent"), col("total_transactions"), col("begin_date"),
+        col("end_date"), col("unique_categories"), col("n_categories"),
+        col("unique_vendors"), col("n_vendors"), col("spending_per_category"),
+        col("spending_per_vendor"), col("pct_change_category"),
+        col("pct_change_vendor"), col("avg_category"), col("avg_vendor"),
+        slice(col("spending_per_vendor"), 1, 5).as("top_5_vendors"))
 
     // P2: details = report minus (begin_date, end_date, fi_summary).
     val detailCols = Seq("total_spent", "total_transactions",
@@ -329,10 +348,13 @@ object SpendingReport {
   /** Report + fi_summary enrichment (driver-side single-row step,
     * §2.10): collects the one report row, renders the executive summary
     * via the supplied function (deterministic stub by default), and
-    * returns the final file_details-shaped row. */
+    * returns the final file_details-shaped row. The row is materialised
+    * by an eager `localCheckpoint`, so the collect and the caller's
+    * write read the same row (one `uuid()`), and nothing is left in the
+    * session's cache when the caller drops the frame. */
   def enriched(tx: DataFrame,
                summarize: ReportFields => String = Summarizer.stub): DataFrame = {
-    val r = report(tx).cache()
+    val r = report(tx).localCheckpoint()
     val row = r.select("begin_date", "end_date", "total_spent",
       "total_transactions", "unique_categories").head()
     val fields = ReportFields(

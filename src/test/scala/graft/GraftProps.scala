@@ -2,6 +2,9 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lag, row_number, sum}
 import graft.operators.{ReportUpsert, SpendingReport}
 
 /** ScalaCheck properties for the algebraic invariants (SURVEY §5):
@@ -115,11 +118,27 @@ object GraftProps extends Properties("graft") {
       Prop(a == b) :| s"parts=$parts a=$a b=$b"
   }
 
+  /** Reference for the report's per-key folds: the per-(date, key)
+    * sums — the long form of the reference's pivot
+    * (transformer.py:217-218) — over the dense date×key grid with
+    * absent cells imputed 0.0, pandas' `fillna(0)`. */
+  private def bucketKeySums(tx: DataFrame, key: String): DataFrame =
+    tx.groupBy(col("txn_date"), col(key))
+      .agg(sum(col("amount").cast("decimal(14,2)")).cast("double").as("amount"))
+
+  private def denseGrid(tx: DataFrame, key: String): DataFrame = {
+    val dates = tx.select(col("txn_date")).distinct()
+    val keys = tx.select(col(key)).distinct()
+    dates.crossJoin(keys)
+      .join(bucketKeySums(tx, key), Seq("txn_date", key), "left")
+      .na.fill(0.0, Seq("amount"))
+  }
+
   property("denseGrid preserves present cells and zero-fills absent") = forAll(genTx) { rows =>
     val tx = toTx(rows)
-    val grid = SpendingReport.denseGrid(tx, "category").collect()
+    val grid = denseGrid(tx, "category").collect()
       .map(r => (r.getDate(0).toString, r.getString(1)) -> r.getDouble(2)).toMap
-    val long = SpendingReport.bucketKeySums(tx, "category").collect()
+    val long = bucketKeySums(tx, "category").collect()
       .map(r => (r.getDate(0).toString, r.getString(1)) -> r.getDouble(2)).toMap
     val presentOk = long.forall { case (k, v) => grid(k) == v }
     val absentOk = grid.forall { case (k, v) => long.getOrElse(k, 0.0) == v }
@@ -130,6 +149,30 @@ object GraftProps extends Properties("graft") {
     }
     Prop(presentOk && absentOk && sizeOk) :| s"grid=${grid.size}"
   }
+
+  property("pct-change fold equals lag over the dense grid, both modes") =
+    forAll(genTx, Gen.oneOf("category", "vendor")) { (rows, key) =>
+      val tx = toTx(rows)
+      val w = Window.partitionBy(col(key)).orderBy(col("txn_date"))
+      val last = denseGrid(tx, key)
+        .withColumn("prev", lag(col("amount"), 1).over(w))
+        .withColumn("rn", row_number().over(w.orderBy(col("txn_date").desc)))
+        .filter(col("rn") === 1)
+        .collect().map(r => r.getAs[String](key) ->
+          ((r.getAs[Double]("amount"), Option(r.getAs[java.lang.Double]("prev")).map(_.toDouble))))
+        .toMap
+      def ref(pandasInf: Boolean): Map[String, Double] = last.map {
+        case (k, (_, None)) => k -> 0.0
+        case (k, (a, Some(p))) if p == 0.0 =>
+          k -> (if (!pandasInf || a == 0.0) 0.0
+                else if (a > 0.0) Double.PositiveInfinity else Double.NegativeInfinity)
+        case (k, (a, Some(p))) => k -> (a - p) / p
+      }
+      def fold(pandasInf: Boolean) = SpendingReport.pctChangeLatest(tx, key, pandasInf)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val (a, b) = (fold(false), fold(true))
+      Prop(a == ref(false) && b == ref(true)) :| s"fold=$a/$b ref=${ref(false)}/${ref(true)}"
+    }
 
   property("pct-change on single-date data is all zero") = forAll(genTx) { rows =>
     val oneDay = toTx(rows.map { case (_, c, v, a) => ("2024-01-01", c, v, a) })

@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Date
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, sum}
 import graft.operators.SpendingReport
 
@@ -184,6 +184,75 @@ class SpendingReportSpec extends SparkSpec {
     assert(vSpent == 145.0)
     val enriched = SpendingReport.enriched(tx)
     assert(enriched.select("fi_summary").head().getString(0).nonEmpty)
+  }
+
+  private def txOf(rows: (String, String, String, Double)*): DataFrame =
+    rows.toDF("dt", "category", "vendor", "amount")
+      .selectExpr("to_date(dt) AS txn_date", "category", "vendor", "amount")
+
+  private val reportLists = Seq("spending_per_category", "pct_change_category",
+    "avg_category", "spending_per_vendor", "pct_change_vendor", "avg_vendor", "top_5_vendors")
+
+  /** Every report field but the id and date stamps, with the ordered
+    * (key, value) lists as Scala pairs. */
+  private def reportFields(t: DataFrame): Map[String, Any] = {
+    val r = SpendingReport.report(t).collect()
+    assert(r.length == 1)
+    def seq[T](c: String) = r(0).getSeq[T](r(0).fieldIndex(c))
+    def kv(c: String) = seq[Row](c).map(x => (x.getString(0), x.getDouble(1)))
+    Map("total_spent" -> r(0).get(0), "total_transactions" -> r(0).getLong(1),
+      "dates" -> (Option(r(0).getDate(2)).map(_.toString) -> Option(r(0).getDate(3)).map(_.toString)),
+      "unique_categories" -> seq[String]("unique_categories"),
+      "n_categories" -> r(0).getAs[Long]("n_categories"),
+      "unique_vendors" -> seq[String]("unique_vendors"),
+      "n_vendors" -> r(0).getAs[Long]("n_vendors")) ++ reportLists.map(c => c -> kv(c))
+  }
+
+  test("report parity: 0->x and x->0 predecessors, zero-imputed means") {
+    // latest 01-03 vs predecessor 01-02: food 20->0, toys 5->10, rent
+    // 0->0; vendors v1 0->0, v2 25->0, v3 0->10
+    assert(reportFields(tx) == Map(
+      "total_spent" -> 145.0, "total_transactions" -> 6L,
+      "dates" -> (Some("2024-01-01") -> Some("2024-01-03")),
+      "unique_categories" -> Seq("food", "rent", "toys"), "n_categories" -> 3L,
+      "unique_vendors" -> Seq("v1", "v2", "v3"), "n_vendors" -> 3L,
+      "spending_per_category" -> Seq("toys" -> 15.0, "food" -> 30.0, "rent" -> 100.0),
+      "pct_change_category" -> Seq("food" -> -1.0, "rent" -> 0.0, "toys" -> 1.0),
+      "avg_category" -> Seq("food" -> 10.0, "rent" -> 100.0 / 3, "toys" -> 5.0),
+      "spending_per_vendor" -> Seq("v3" -> 10.0, "v2" -> 25.0, "v1" -> 110.0),
+      "pct_change_vendor" -> Seq("v1" -> 0.0, "v2" -> -1.0, "v3" -> 0.0),
+      "avg_vendor" -> Seq("v1" -> 110.0 / 3, "v2" -> 25.0 / 3, "v3" -> 10.0 / 3),
+      "top_5_vendors" -> Seq("v3" -> 10.0, "v2" -> 25.0, "v1" -> 110.0)))
+    val pandas = SpendingReport.pctChangeLatest(tx, "vendor", pandasInf = true)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(pandas == Map("v1" -> 0.0, "v2" -> -1.0, "v3" -> Double.PositiveInfinity))
+  }
+
+  test("report parity: single date, tied totals, more than 5 vendors") {
+    // one date: every pct_change is the leading row's 0; b and a tie at
+    // 10 and sort by name; top-5 are the 5 LOWEST of 7 vendors
+    val f = reportFields(txOf(
+      ("2024-01-05", "b", "v1", 7.0), ("2024-01-05", "b", "v2", 3.0),
+      ("2024-01-05", "a", "v3", 5.0), ("2024-01-05", "a", "v4", 4.0),
+      ("2024-01-05", "a", "v5", 1.0), ("2024-01-05", "c", "v6", 2.0),
+      ("2024-01-05", "c", "v7", 6.0)))
+    assert(f("spending_per_category") == Seq("c" -> 8.0, "a" -> 10.0, "b" -> 10.0))
+    assert(f("pct_change_category") == Seq("a" -> 0.0, "b" -> 0.0, "c" -> 0.0))
+    assert(f("avg_category") == Seq("a" -> 10.0, "b" -> 10.0, "c" -> 8.0))
+    assert(f("spending_per_vendor") == Seq("v5" -> 1.0, "v6" -> 2.0, "v2" -> 3.0,
+      "v4" -> 4.0, "v3" -> 5.0, "v7" -> 6.0, "v1" -> 7.0))
+    assert(f("top_5_vendors") == Seq("v5" -> 1.0, "v6" -> 2.0, "v2" -> 3.0,
+      "v4" -> 4.0, "v3" -> 5.0))
+    assert(f("pct_change_vendor") == (1 to 7).map(i => s"v$i" -> 0.0))
+    assert(f("n_vendors") == 7L && f("total_transactions") == 7L && f("total_spent") == 28.0)
+    assert(f("dates") == (Some("2024-01-05") -> Some("2024-01-05")))
+  }
+
+  test("report parity: empty input still yields the one row") {
+    assert(reportFields(txOf()) == Map(
+      "total_spent" -> null, "total_transactions" -> 0L, "dates" -> (None -> None),
+      "unique_categories" -> Nil, "n_categories" -> 0L,
+      "unique_vendors" -> Nil, "n_vendors" -> 0L) ++ reportLists.map(_ -> Nil))
   }
 
   test("unpivot round-trips the pivot (dense grid preserved)") {
